@@ -2219,32 +2219,18 @@ def embedding_dedup_clusters(
 # ---------------------------------------------------------------------------
 
 def _gram_dup_occurrences(
-    docs: DataFrame, id_col: str, text_col: str, k: int, skew_safe: bool = True
+    docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
     """(id, pos, end): every word-``k``-gram occurrence that is NOT the
     corpus-wide canonical (lexicographically-min ``(id, pos)``) occurrence
     of its gram. Positions are 1-based; ``end = pos + k - 1``.
 
     The inverted-index shape: the occurrence table is O(total tokens) and
-    shuffles NARROW — ``(id, pos, md5)`` only, never the text.
-
-    Canonical selection has two equivalent physical forms, chosen by
-    ``skew_safe``:
-
-    - ``True`` (default, the 100 TB path): min-struct aggregate per gram +
-      join back. The min combines MAP-SIDE, and the 1:N join is
-      AQE-skew-splittable — a boilerplate gram occurring in millions of
-      documents (the COMMON hot case in web corpora, not an adversarial
-      one) spreads across split partitions. Costs a second compute of the
-      gram table (the partial-agg exchange differs from the join exchange,
-      so Catalyst cannot reuse it).
-    - ``False``: one row_number window over the gram key — a single pass
-      and ~1.6× faster at bench scale, but a hot gram's whole group must
-      sort inside ONE task (windows are not skew-splittable), so reserve
-      it for corpora known to be boilerplate-free.
+    shuffles NARROW — ``(id, pos, md5)`` only, never the text. Canonical
+    selection is :func:`_non_canonical_occurrences`.
     """
     occ = _gram_occurrences_arrow(docs, id_col, text_col, k)
-    return _non_canonical_occurrences(occ, k, skew_safe)
+    return _non_canonical_occurrences(occ, k)
 
 
 def _gram_occurrences_expr(
@@ -2252,9 +2238,10 @@ def _gram_occurrences_expr(
 ) -> DataFrame:
     """Expression-path word-gram occurrence table ``(id, pos, gh)`` —
     retained as the semantics reference the Arrow producer is test-pinned
-    against (``tests/test_substring_dedup.py``).
+    against (``tests/test_substring_dedup.py``). No operator calls it: the
+    production path is :func:`_gram_occurrences_arrow`.
 
-    NOT the default production path (round 11): Catalyst collapses the
+    Why it is not the production path (round 11): Catalyst collapses the
     ``_t`` projection through the Generate, so ``split(lower(regexp_
     replace(trim(text))))`` re-evaluates PER EXPLODED ROW — O(len) text
     work × O(len) positions = O(len²) per document (the formatted plan
@@ -2285,23 +2272,21 @@ def _gram_occurrences_expr(
 
 
 def _gram_occurrences_arrow(
-    docs: DataFrame, id_col: str, text_col: str, k: int,
-    char_level: bool = False,
+    docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """Arrow-batched gram-occurrence production ``(id, pos, gh)`` for the
-    substring-span family — one zero-shuffle ``mapInPandas`` pass per input
-    partition (guide §4), bit-identical to the expression path and ~5×
+    """Arrow-batched word-gram occurrence production ``(id, pos, gh)`` —
+    the production path of the word-level span operators. One zero-shuffle
+    ``mapInPandas`` pass per input partition (guide §4), bit-identical to
+    the expression reference :func:`_gram_occurrences_expr` and ~5×
     faster (round 11).
 
-    Word mode replicates ``tokens()`` exactly as the minhash Arrow pass
-    does (ASCII-space-only ``trim``, Java ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]``
+    Replicates ``tokens()`` exactly as the minhash Arrow pass does
+    (ASCII-space-only ``trim``, Java ``\\s`` = ``[ \\t\\n\\x0b\\f\\r]``
     collapse, lowercase, single-space split — multibyte parity pinned by
     the sig-path tests); gram = ``md5(' '.join(tokens[p:p+k]))``, emitted
-    for 1-based positions 1..n_tokens-k+1. Char mode hashes raw-text
-    slices ``md5(text[p:p+k])`` (no normalization — same as the expression
-    twin; Python slicing and Spark ``substr`` both count code points).
-    NULL text and texts with fewer than ``k`` tokens/chars emit no rows,
-    matching the expression path's ``when(n >= k, sequence(..))`` guard.
+    for 1-based positions 1..n_tokens-k+1. NULL text and texts with fewer
+    than ``k`` tokens emit no rows, matching the expression path's
+    ``when(n >= k, sequence(..))`` guard.
     """
     import pandas as pd
     from pyspark.sql import types as T
@@ -2317,7 +2302,6 @@ def _gram_occurrences_arrow(
     base = _spread(
         docs, F.col(id_col).alias("id"), F.col(text_col).alias("_txt")
     )
-    kk, char_mode = k, char_level
 
     def gen(it):
         import hashlib
@@ -2330,33 +2314,13 @@ def _gram_occurrences_arrow(
             for i, txt in zip(pdf["id"], pdf["_txt"]):
                 if txt is None:
                     continue
-                if char_mode:
-                    m = len(txt) - (kk - 1)
-                    enc = txt.encode("utf-8")
-                    if len(enc) == len(txt):
-                        # pure-ASCII fast path: byte offsets == char offsets
-                        for p in range(m):
-                            ids.append(i)
-                            poss.append(p + 1)
-                            ghs.append(md5(enc[p: p + kk]).digest())
-                    else:
-                        for p in range(m):
-                            ids.append(i)
-                            poss.append(p + 1)
-                            ghs.append(
-                                md5(txt[p: p + kk].encode("utf-8")).digest()
-                            )
-                else:
-                    t = ws.sub(" ", txt.strip(" ")).lower()
-                    tk = t.split(" ")
-                    m = len(tk) - (kk - 1)
-                    for p in range(m):
-                        ids.append(i)
-                        poss.append(p + 1)
-                        ghs.append(
-                            md5(" ".join(tk[p: p + kk]).encode("utf-8"))
-                            .digest()
-                        )
+                tk = ws.sub(" ", txt.strip(" ")).lower().split(" ")
+                for p in range(len(tk) - (k - 1)):
+                    ids.append(i)
+                    poss.append(p + 1)
+                    ghs.append(
+                        md5(" ".join(tk[p: p + k]).encode("utf-8")).digest()
+                    )
             yield pd.DataFrame(
                 {
                     "id": ids,
@@ -2368,15 +2332,21 @@ def _gram_occurrences_arrow(
     return base.mapInPandas(gen, out_schema)
 
 
-def _non_canonical_occurrences(
-    occ: DataFrame, k: int, skew_safe: bool,
-    prefilter_hot_prefix: bool = False,
-) -> DataFrame:
+def _non_canonical_occurrences(occ: DataFrame, k: int) -> DataFrame:
     """Shared back half of the span machinery: from ``(id, pos, gh)`` gram
     occurrences, every occurrence that is NOT its gram's corpus-wide
     canonical (lexicographically-min ``(id, pos)``) one, as
-    ``(id, pos, end)``. See :func:`_gram_dup_occurrences` for the
-    ``skew_safe`` physical-form tradeoff.
+    ``(id, pos, end)``.
+
+    Physical form: a min aggregate per gram plus a join back. The min
+    combines MAP-SIDE, so per-gram state is one value however often the
+    gram occurs, and the 1:N join back is AQE-skew-splittable — a
+    boilerplate gram occurring in millions of documents (the COMMON hot
+    case in web corpora, not an adversarial one) spreads across split
+    partitions. A ``row_number`` window over the gram key gives the same
+    rows in one pass (the DuckDB oracles are written that way), but a hot
+    gram's whole group would sort inside ONE task: windows are not
+    skew-splittable, so that form is not used here.
 
     INVARIANT (round-11 ADVICE): ``id`` and ``pos`` must be non-null —
     every in-tree producer guarantees it (Generate/mapInPandas emit rows
@@ -2385,101 +2355,55 @@ def _non_canonical_occurrences(
     null ``_k`` which ``min`` ignores and the ``_k != c`` filter drops,
     whereas ``struct(null, pos)`` participates in struct ordering), so a
     null-emitting producer must not be routed here without adding an
-    explicit isNotNull filter to pin one behavior.
+    explicit isNotNull filter to pin one behavior."""
+    from pyspark.sql import types as T
 
-    ``prefilter_hot_prefix`` (round 12, char-gram path): on an O(chars)
-    occurrence table nearly every gram is a singleton (sf0.1: 1.18M
-    distinct of 1.24M occurrences, 55K duplicated), so the canonical
-    aggregate's hash table — 16-byte binary keys + a decimal min — is
-    sized by the corpus while its useful output is the tiny duplicated
-    tail. A first count-only aggregate on a 60-bit gram-hash PREFIX (a
-    plain long: narrower exchange rows, cheaper hash table) finds
-    may-be-duplicated prefixes, and only occurrences of those reach the
-    full-key aggregate. EXACT by construction: a gram with >= 2
-    occurrences always has prefix count >= 2 (superset), and the full
-    aggregate re-checks ``count >= 2`` on the true 16-byte key, so a
-    prefix-collision singleton is dropped exactly as before (equivalence
-    test-pinned; measured 2.44 -> 2.02 s noop at sf0.1 with identical
-    output). The price is two extra occurrence-map passes (the count agg
-    and the semi-join probe recompute the explode+md5 map) — the right
-    trade where the map is a cheap codegen'd scan but the wide-state
-    aggregate dominates, which is the char family's measured shape; the
-    word form keeps the single aggregate."""
-    if prefilter_hot_prefix and skew_safe:
-        # 15 hex chars = 60 bits keeps conv() inside a signed long
-        gh8 = F.conv(
-            F.substring(F.hex(F.col("gh")), 1, 15), 16, 10
-        ).cast("long")
-        hot8 = (
-            occ.select(gh8.alias("_g8"))
-            .groupBy("_g8")
-            .agg(F.count(F.lit(1)).alias("_n8"))
-            .where(F.col("_n8") >= 2)
-            .select("_g8")
+    # Keep only grams with >= 2 occurrences on the build side (round 11):
+    # a singleton gram's one occurrence IS its canonical, so the post-join
+    # filter dropped it anyway — filtering the aggregate first is
+    # value-identical and shrinks the join's build/broadcast side from
+    # O(distinct grams) to O(duplicated grams). The count combines
+    # map-side with the same min partial.
+    id_dt = occ.schema["id"].dataType
+    if isinstance(id_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        # HASH-aggregable canonical pick (round 11, guide §2): MIN over a
+        # STRUCT forces SortAggregate (struct ordering has no hash-agg
+        # support — measured as the dominant stage of the char-span rows);
+        # packing (id, pos) into ONE decimal(38,0) as id * 2^32 + pos
+        # preserves lexicographic order exactly for any signed 64-bit id
+        # (pos ∈ [1, 2^31) is always below the 2^32 stride) and
+        # min(decimal) hash-aggregates.
+        key = (
+            F.col("id").cast("decimal(20,0)")
+            * F.lit(4294967296).cast("decimal(20,0)")
+            + F.col("pos").cast("decimal(20,0)")
+        ).cast("decimal(38,0)")
+        keyed = occ.withColumn("_k", key)
+        canon = (
+            keyed.groupBy("gh")
+            .agg(F.min("_k").alias("c"), F.count(F.lit(1)).alias("_n"))
+            .where(F.col("_n") >= 2)
+            .select("gh", "c")
         )
-        # inner join == semi-join here (hot8 is a distinct-key aggregate);
-        # broadcast-vs-shuffle is left to the planner so an adversarially
-        # duplicate-heavy corpus degrades to a shuffled join, never an OOM
-        occ = occ.withColumn("_g8", gh8).join(hot8, "_g8").drop("_g8")
-    if skew_safe:
-        # Keep only grams with >= 2 occurrences on the build side (round
-        # 11): a singleton gram's one occurrence IS its canonical, so the
-        # post-join filter dropped it anyway — filtering the aggregate
-        # first is value-identical and shrinks the join's build/broadcast
-        # side from O(distinct grams) to O(duplicated grams). The count
-        # combines map-side with the same min partial.
-        from pyspark.sql import types as T
-
-        id_dt = occ.schema["id"].dataType
-        integral = isinstance(
-            id_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        )
-        if integral:
-            # HASH-aggregable canonical pick (round 11, guide §2): MIN over
-            # a STRUCT forces SortAggregate (struct ordering has no hash-agg
-            # support — measured as the dominant stage of the char-span
-            # rows); packing (id, pos) into ONE decimal(38,0) as
-            # id * 2^32 + pos preserves lexicographic order exactly for any
-            # signed 64-bit id (pos ∈ [1, 2^31) is always below the 2^32
-            # stride) and min(decimal) hash-aggregates.
-            key = (
-                F.col("id").cast("decimal(20,0)")
-                * F.lit(4294967296).cast("decimal(20,0)")
-                + F.col("pos").cast("decimal(20,0)")
-            ).cast("decimal(38,0)")
-            keyed = occ.withColumn("_k", key)
-            canon = (
-                keyed.groupBy("gh")
-                .agg(F.min("_k").alias("c"), F.count(F.lit(1)).alias("_n"))
-                .where(F.col("_n") >= 2)
-                .select("gh", "c")
-            )
-            dups = keyed.join(canon, "gh").where(F.col("_k") != F.col("c"))
-        else:
-            canon = (
-                occ.groupBy("gh")
-                .agg(
-                    F.min(F.struct("id", "pos")).alias("c"),
-                    F.count(F.lit(1)).alias("_n"),
-                )
-                .where(F.col("_n") >= 2)
-                .select("gh", "c")
-            )
-            dups = occ.join(canon, "gh").where(
-                (F.col("id") != F.col("c.id"))
-                | (F.col("pos") != F.col("c.pos"))
-            )
+        dups = keyed.join(canon, "gh").where(F.col("_k") != F.col("c"))
     else:
-        w = Window.partitionBy("gh").orderBy("id", "pos")
-        dups = occ.withColumn("_rn", F.row_number().over(w)).where(
-            F.col("_rn") > 1
+        canon = (
+            occ.groupBy("gh")
+            .agg(
+                F.min(F.struct("id", "pos")).alias("c"),
+                F.count(F.lit(1)).alias("_n"),
+            )
+            .where(F.col("_n") >= 2)
+            .select("gh", "c")
+        )
+        dups = occ.join(canon, "gh").where(
+            (F.col("id") != F.col("c.id")) | (F.col("pos") != F.col("c.pos"))
         )
     return dups.select("id", "pos", (F.col("pos") + F.lit(k - 1)).alias("end"))
 
 
 def _char_gram_dup_occurrences(
-    docs: DataFrame, id_col: str, text_col: str, k: int,
-    skew_safe: bool = True,
+    docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
     """Character-level twin of :func:`_gram_dup_occurrences`: ``(id, pos,
     end)`` for every character-``k``-gram occurrence that is not its gram's
@@ -2494,7 +2418,7 @@ def _char_gram_dup_occurrences(
     character resolution; everything shuffled is still ``(id, pos,
     16-byte gh)``, never the text.
     """
-    # Expression path, NOT the Arrow producer (round-11 A/B at sf1): char
+    # Expression path, NOT an Arrow producer (round-11 A/B at sf1): char
     # occurrence volume is O(chars) — ~8x the word form — and at that
     # volume the Python-boundary serialization of the (id, pos, gh) table
     # dominates: full-query sf1 wall 16.7 s (expr, stable) vs 24-114 s
@@ -2503,18 +2427,18 @@ def _char_gram_dup_occurrences(
     # so the O(len^2) collapse that justified Arrow for word grams does
     # not bite here. At sf0.1 the two are within ~0.6 s of each other.
     occ = _char_gram_occurrences_expr(docs, id_col, text_col, k)
-    return _non_canonical_occurrences(
-        occ, k, skew_safe, prefilter_hot_prefix=True
-    )
+    return _non_canonical_occurrences(occ, k)
 
 
 def _char_gram_occurrences_expr(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """Expression-path char-gram occurrence table — the semantics reference
-    for the Arrow producer (see :func:`_gram_occurrences_expr`: the carried
-    ``_s`` text column is copied into every exploded row's UnsafeRow, an
-    O(len²) bytes-materialized cost the Arrow pass avoids)."""
+    """Char-gram occurrence table ``(id, pos, gh)`` — the production path
+    of the char-level span operators (:func:`_char_gram_dup_occurrences`
+    says why it is not Arrow-batched). Hashes raw-text slices
+    ``md5(substr(text, pos, k))`` with no normalization; ``substr`` counts
+    code points. NULL text and texts shorter than ``k`` chars emit no
+    rows."""
     t = F.col(text_col)
     n = F.length(t)
     return docs.select(
@@ -2551,7 +2475,6 @@ def _merged_spans(dups: DataFrame) -> DataFrame:
 
 def duplicate_spans(
     docs: DataFrame, id_col: str, text_col: str, k: int = 8,
-    skew_safe: bool = True,
 ) -> DataFrame:
     """Exact substring-level dedup statistics (Lee et al. 2022 semantics,
     re-expressed relationally): a token position is *duplicated* when it is
@@ -2568,7 +2491,7 @@ def duplicate_spans(
     of span ends), and a per-doc count join. Shuffle volume is O(tokens)
     ids+ints; nothing quadratic, no text movement after the scan.
     """
-    dups = _gram_dup_occurrences(docs, id_col, text_col, k, skew_safe)
+    dups = _gram_dup_occurrences(docs, id_col, text_col, k)
     spans = _merged_spans(dups)
     per_doc = spans.groupBy("id").agg(
         F.count(F.lit(1)).cast("long").alias("n_spans"),
@@ -2590,7 +2513,6 @@ def duplicate_spans(
 
 def remove_duplicate_spans(
     docs: DataFrame, id_col: str, text_col: str, k: int = 8,
-    skew_safe: bool = True,
 ) -> DataFrame:
     """Cut every duplicated span (as defined by :func:`duplicate_spans`) out
     of each document, keeping only the corpus-wide canonical occurrence of
@@ -2601,7 +2523,7 @@ def remove_duplicate_spans(
     ``(pos, token)`` structs — one shuffle keyed on the doc id, bounded by
     document length, no pairwise work.
     """
-    dups = _gram_dup_occurrences(docs, id_col, text_col, k, skew_safe)
+    dups = _gram_dup_occurrences(docs, id_col, text_col, k)
     covered = dups.select(
         "id", F.explode(F.sequence(F.col("pos"), F.col("end"))).alias("pos")
     ).dropDuplicates(["id", "pos"])
@@ -2630,7 +2552,6 @@ def remove_duplicate_spans(
 
 def duplicate_char_spans(
     docs: DataFrame, id_col: str, text_col: str, k: int = 50,
-    skew_safe: bool = True,
 ) -> DataFrame:
     """CHARACTER-level substring-dedup statistics (round-5 VERDICT #6):
     a character position is duplicated when covered by a char-``k``-gram
@@ -2644,9 +2565,9 @@ def duplicate_char_spans(
 
     Returns ``(id, n_chars, dup_chars, n_spans, dup_fraction)``. Scale
     shape identical to :func:`duplicate_spans` with O(chars) occurrence
-    rows instead of O(tokens); same ``skew_safe`` tradeoff.
+    rows instead of O(tokens).
     """
-    dups = _char_gram_dup_occurrences(docs, id_col, text_col, k, skew_safe)
+    dups = _char_gram_dup_occurrences(docs, id_col, text_col, k)
     spans = _merged_spans(dups)
     per_doc = spans.groupBy("id").agg(
         F.count(F.lit(1)).cast("long").alias("n_spans"),
@@ -2676,7 +2597,6 @@ def duplicate_char_spans(
 
 def remove_duplicate_char_spans(
     docs: DataFrame, id_col: str, text_col: str, k: int = 50,
-    skew_safe: bool = True,
 ) -> DataFrame:
     """Cut every duplicated ≥-``k``-char span (per
     :func:`duplicate_char_spans`) out of each document, keeping the
@@ -2689,7 +2609,7 @@ def remove_duplicate_char_spans(
     it, concatenating the text between spans. One doc-keyed shuffle of
     span structs; the text itself never shuffles (it rides the docs scan).
     """
-    dups = _char_gram_dup_occurrences(docs, id_col, text_col, k, skew_safe)
+    dups = _char_gram_dup_occurrences(docs, id_col, text_col, k)
     spans = _merged_spans(dups)
     per_doc = spans.groupBy("id").agg(
         F.sort_array(F.collect_list(F.struct("s", "e"))).alias("sp")

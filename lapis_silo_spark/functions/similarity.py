@@ -546,10 +546,11 @@ def lsh_candidate_pairs(
     ``applyInPandas`` task per (bucket, bi ≤ bj) block pair runs a single
     BLAS (|A| × dim) · (dim × |B|) matmul (the
     ``embedding_near_dup_pairs_blocked`` kernel, per bucket) — per-task
-    memory is bounded by ``2 · block_rows · dim · 8`` bytes regardless of
-    bucket skew (guide §2.5: a hot bucket becomes more tasks, not a bigger
-    task), shuffle volume is O(n_tables · rows · ceil(|bucket| /
-    block_rows) · dim) — the blocked all-pairs bandwidth-for-memory trade,
+    memory is bounded in expectation by ``2 · block_rows · dim · 8`` bytes
+    regardless of bucket skew (guide §2.5: a hot bucket becomes more tasks,
+    not a bigger task; rows are hash-assigned to blocks, so a block holds
+    ``block_rows`` rows on average, not at most), shuffle volume is
+    O(n_tables · rows · ceil(|bucket| / block_rows) · dim) — the blocked all-pairs bandwidth-for-memory trade,
     paid only inside hot buckets — and only verified survivors (cos ≥
     threshold) reach the cross-table ``dropDuplicates``. Buckets holding a
     single row are dropped before any replication (they cannot produce a
@@ -577,6 +578,9 @@ def lsh_candidate_pairs(
             F.col(id_col).alias("id"),
             F.col(vec_col).cast("array<double>").alias("vec"),
         )
+        # a null id has no pair identity, and pandas would turn it into a
+        # NaN that the int64 id array in bucket_block_pairs cannot hold
+        .filter(F.col("id").isNotNull())
         .withColumn("nrm", norm(F.col("vec")))
         # zero-norm vectors have no cosine with anything (the exact
         # baseline's NaN never passes the threshold) and would

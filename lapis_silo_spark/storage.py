@@ -76,7 +76,10 @@ def save_version(
     ``filter_expressions/date_between.cpp:75-134``, and its per-chunk
     coverage ranges, ``horizontal_coverage_index.h:33-35``). Pinned by
     ``tests/test_storage_pruning.py``: scan-level ``numOutputRows`` drops
-    ~60× under a narrow date predicate vs an unsorted layout.
+    ~60× under a narrow date predicate vs an unsorted layout. A table in
+    both maps is clustered by its partition columns instead of range
+    partitioned, and every written file is still sorted on the sort
+    columns.
 
     ``parquet_options`` are writer options applied to every Parquet write
     (e.g. ``{"parquet.block.size": ...}`` — the row group is the pruning
@@ -126,8 +129,6 @@ def save_version(
     for name, df in db.tables.items():
         path = os.path.join(vdir, "tables", name)
         sorts = (table_sorts or {}).get(name)
-        if sorts:
-            df = _ranged(df, sorts)
         parts = (table_partitions or {}).get(name)
         if parts:
             # Cluster rows by the partition columns before a partitionBy
@@ -138,6 +139,13 @@ def save_version(
             # splits skewed values instead of single-tasking them (the
             # plain ``repartition(cols)`` would).
             df = df.hint("rebalance", *parts)
+            if sorts:
+                # the rebalance shuffle discards any earlier order, so sort
+                # after it; partition columns lead so the partitionBy
+                # writer takes this order as is instead of re-sorting
+                df = df.sortWithinPartitions(*parts, *sorts)
+        elif sorts:
+            df = _ranged(df, sorts)
         writer = df.write.mode("overwrite")
         if parquet_options:
             writer = writer.options(**parquet_options)

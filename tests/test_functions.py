@@ -460,10 +460,6 @@ def test_char_span_dedup_hand_computed(spark):
     assert clean[3]["clean_text"] == ident
     assert clean[4]["clean_text"] == "" and clean[4]["clean_chars"] == 0
     assert clean[5]["clean_text"] == rows[4][1]
-    # skew_safe=False (window form) must produce identical output
-    alt = sorted(map(tuple, dedup.duplicate_char_spans(
-        docs, "doc_id", "text", k=50, skew_safe=False).collect()))
-    assert alt == sorted(map(tuple, stats.values()))
 
 
 def test_cluster_assignment_string_ids_transitive(spark):
@@ -964,7 +960,7 @@ def test_lsh_candidate_pairs_value_identical_to_join_form(spark):
     reconstructed here from the same primitives. block_rows=3 forces
     multi-block buckets (diagonal + cross-block tasks, both pair
     orientations) on a corpus with a hot near-duplicate cluster, a spread
-    tail, and zero-norm / NaN / null edge rows."""
+    tail, and zero-norm / NaN / null-vector / null-id edge rows."""
     import numpy as np
 
     from pyspark.sql import functions as F
@@ -980,6 +976,7 @@ def test_lsh_candidate_pairs_value_identical_to_join_form(spark):
     rows.append((120, [0.0] * dim))              # zero norm: dropped
     rows.append((121, [float("nan")] + [0.0] * (dim - 1)))  # NaN norm
     rows.append((122, None))                      # null vector
+    rows.append((None, rows[0][1]))               # null id on a hot vector
     df = spark.createDataFrame(rows, schema="vec_id long, embedding array<double>")
 
     new = {

@@ -56,8 +56,7 @@ def _replay_char_spans(texts: list[str], k: int):
 def test_char_spans_match_pure_python_replay(spark, texts):
     """duplicate_char_spans / remove_duplicate_char_spans agree exactly
     with the brute-force replay on adversarial corpora (dense collisions,
-    overlapping/adjacent merges, empty and sub-k docs), in BOTH physical
-    forms (skew_safe join and row_number window)."""
+    overlapping/adjacent merges, empty and sub-k docs)."""
     from lapis_silo_spark.functions.dedup import (
         duplicate_char_spans,
         remove_duplicate_char_spans,
@@ -67,26 +66,23 @@ def test_char_spans_match_pure_python_replay(spark, texts):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     expect = _replay_char_spans(texts, K)
 
-    for skew_safe in (True, False):
-        stats = {
-            r["id"]: r
-            for r in duplicate_char_spans(
-                df, "doc_id", "text", k=K, skew_safe=skew_safe
-            ).collect()
-        }
-        clean = {
-            r["id"]: r
-            for r in remove_duplicate_char_spans(
-                df, "doc_id", "text", k=K, skew_safe=skew_safe
-            ).collect()
-        }
-        assert set(stats) == set(expect) and set(clean) == set(expect)
-        for i, (dup_chars, n_spans, clean_text) in expect.items():
-            assert stats[i]["dup_chars"] == dup_chars, (skew_safe, i, texts)
-            assert stats[i]["n_spans"] == n_spans, (skew_safe, i, texts)
-            assert stats[i]["n_chars"] == len(texts[i - 1])
-            assert clean[i]["clean_text"] == clean_text, (skew_safe, i, texts)
-            assert clean[i]["clean_chars"] == len(clean_text)
+    stats = {
+        r["id"]: r
+        for r in duplicate_char_spans(df, "doc_id", "text", k=K).collect()
+    }
+    clean = {
+        r["id"]: r
+        for r in remove_duplicate_char_spans(
+            df, "doc_id", "text", k=K
+        ).collect()
+    }
+    assert set(stats) == set(expect) and set(clean) == set(expect)
+    for i, (dup_chars, n_spans, clean_text) in expect.items():
+        assert stats[i]["dup_chars"] == dup_chars, (i, texts)
+        assert stats[i]["n_spans"] == n_spans, (i, texts)
+        assert stats[i]["n_chars"] == len(texts[i - 1])
+        assert clean[i]["clean_text"] == clean_text, (i, texts)
+        assert clean[i]["clean_chars"] == len(clean_text)
 
 
 vec_strategy = st.lists(

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 
 from lapis_silo_spark.functions.dedup import (
+    duplicate_char_spans,
     duplicate_spans,
     remove_duplicate_spans,
 )
@@ -145,32 +146,18 @@ def test_pii_redact_and_counts(spark):
 
 
 def test_substring_plan_stays_narrow(spark, span_docs):
-    """The dup-occurrence join must not carry text: only id/pos/md5 shuffle."""
-    plan = duplicate_spans(span_docs, "doc_id", "text", k=3)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-
-
-def test_skew_safe_and_window_forms_identical(spark, span_docs):
-    """Both physical forms of canonical selection produce identical spans."""
-    a = sorted(
-        map(tuple, duplicate_spans(span_docs, "doc_id", "text", k=3,
-                                   skew_safe=True).collect())
-    )
-    b = sorted(
-        map(tuple, duplicate_spans(span_docs, "doc_id", "text", k=3,
-                                   skew_safe=False).collect())
-    )
-    assert a == b
-    ca = sorted(
-        map(tuple, remove_duplicate_spans(span_docs, "doc_id", "text", k=3,
-                                          skew_safe=True).collect())
-    )
-    cb = sorted(
-        map(tuple, remove_duplicate_spans(span_docs, "doc_id", "text", k=3,
-                                          skew_safe=False).collect())
-    )
-    assert ca == cb
+    """The dup-occurrence join must not carry text: only id/pos/md5 shuffle.
+    The char form keeps one canonical aggregate on the full gram hash: no
+    extra aggregate on a gram-hash prefix (``_g8``) and its semi-join."""
+    for out in (
+        duplicate_spans(span_docs, "doc_id", "text", k=3),
+        duplicate_char_spans(span_docs, "doc_id", "text", k=3),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan
+        assert "BatchEvalPython" not in plan
+        aggs = [ln for ln in plan.splitlines() if "Aggregate" in ln]
+        assert aggs and not any("_g8" in ln for ln in aggs), plan
 
 
 def test_chunk_windows_plan_has_no_exchange(spark):
@@ -188,13 +175,12 @@ def test_chunk_windows_plan_has_no_exchange(spark):
 
 
 def test_gram_occurrences_arrow_matches_expression_path(spark):
-    """The Arrow gram producer (round 11) must emit the exact occurrence
-    multiset of the expression path it replaced, for BOTH word and char
-    modes, across the edge cases the expression guards encode: NULL text,
-    empty string, whitespace-only, shorter-than-k, untrimmed \\t/\\n
-    whitespace, uppercase (normalization), and multibyte UTF-8."""
+    """The Arrow word-gram producer (round 11) must emit the exact
+    occurrence multiset of the expression path it replaced, across the edge
+    cases the expression guards encode: NULL text, empty string,
+    whitespace-only, shorter-than-k, untrimmed \\t/\\n whitespace,
+    uppercase (normalization), and multibyte UTF-8."""
     from lapis_silo_spark.functions.dedup import (
-        _char_gram_occurrences_expr,
         _gram_occurrences_arrow,
         _gram_occurrences_expr,
     )
@@ -224,43 +210,3 @@ def test_gram_occurrences_arrow_matches_expression_path(spark):
         exp = multiset(_gram_occurrences_expr(docs, "doc_id", "text", k))
         arr = multiset(_gram_occurrences_arrow(docs, "doc_id", "text", k))
         assert arr == exp and len(exp) > 0, f"word k={k}"
-
-    for k in (3, 5):
-        exp = multiset(_char_gram_occurrences_expr(docs, "doc_id", "text", k))
-        arr = multiset(
-            _gram_occurrences_arrow(docs, "doc_id", "text", k, char_level=True)
-        )
-        assert arr == exp and len(exp) > 0, f"char k={k}"
-
-
-def test_char_span_hot_prefix_prefilter_identical(spark):
-    """The round-12 hot-prefix prefilter must not change the duplicated-
-    occurrence set: a gram with >=2 occurrences always survives the prefix
-    count, and prefix-collision singletons are re-dropped by the full-key
-    count. Pinned on a corpus with exact twins, partial overlaps, short
-    and NULL texts."""
-    from pyspark.sql import functions as F
-
-    from lapis_silo_spark.functions import dedup as D
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog " * 3),
-        (2, "the quick brown fox jumps over the lazy dog " * 3),
-        (3, "something else entirely with no duplication at all here"),
-        (4, "the quick brown fox jumps over the lazy dog tail differs"),
-        (5, None),
-        (6, "short"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    occ = D._char_gram_occurrences_expr(docs, "doc_id", "text", 20)
-    base = sorted(
-        map(tuple,
-            D._non_canonical_occurrences(occ, 20, True).collect())
-    )
-    pre = sorted(
-        map(tuple,
-            D._non_canonical_occurrences(
-                occ, 20, True, prefilter_hot_prefix=True
-            ).collect())
-    )
-    assert pre == base and len(base) > 0
